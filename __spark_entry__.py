@@ -356,21 +356,23 @@ def q_j2_anti_seen(spark, sf_dir):
     )
 
 
-def q_j2_anti_seen_cuckoo(spark, sf_dir):
-    """J2 via the deletable cuckoo seen-sketch backend (functions/cuckoo.py,
-    north_rule "bloom/cuckoo URL-seen"): candidates and seen set are keyed on
-    the portable Rabin-Karp hash of (dates, rule_id); an EXECUTOR-RESIDENT
-    shard store (CuckooShardStore — shard tables as files, probes routed by
+def q_j2_anti_seen_sketch(spark, sf_dir):
+    """J2 via the crawl's URL-seen sketch (functions/seen.py): candidates
+    and seen set are keyed on the portable Rabin-Karp hash of
+    (dates, rule_id); an EXECUTOR-RESIDENT Bloom shard store
+    (BloomShardStore — bitsets as files, probes routed by
     pmod(hash, n_shards) so each task loads only its shard, never the whole
-    filter in any process; the r5 residency fix for 10^10-URL frontiers)
-    pre-filters the exact anti-join (seen.anti_join_seen). The sketch can
-    only create false POSITIVES, which the exact recheck absorbs, so the
-    result is bit-identical to the plain hash-keyed anti-join — which is
-    exactly what the oracle recomputes."""
+    filter in any process) pre-filters the exact anti-join
+    (seen.anti_join_seen). The sketch can only create false POSITIVES,
+    which the exact recheck absorbs, so the result is bit-identical to the
+    plain hash-keyed anti-join — which is exactly what the oracle
+    recomputes."""
     import tempfile
 
-    from europarl_crawler_spark.functions.cuckoo import CuckooShardStore
-    from europarl_crawler_spark.functions.seen import anti_join_seen
+    from europarl_crawler_spark.functions.seen import (
+        BloomShardStore,
+        anti_join_seen,
+    )
 
     combos = _combos(spark, sf_dir).withColumn(
         "key_hash",
@@ -385,8 +387,8 @@ def q_j2_anti_seen_cuckoo(spark, sf_dir):
     seen = combos.filter(
         (F.col("rule_id") % 2 == 0) & (F.dayofmonth("dates") % 2 == 0)
     ).select("key_hash")
-    sketch = CuckooShardStore.build(
-        seen, tempfile.mkdtemp(prefix="cuckoo-store-"), "key_hash", n_shards=4
+    sketch = BloomShardStore.build(
+        seen, tempfile.mkdtemp(prefix="seen-store-"), "key_hash", n_shards=4
     )
     return anti_join_seen(combos, seen, sketch, hash_col="key_hash").select(
         "dates", "rule_id", "rulename"
@@ -1275,10 +1277,7 @@ def q_t6_windowed_streaming(spark, sf_dir):
     src = os.path.join(root, "src")
     _t(spark, sf_dir, "events").repartition(4).write.parquet(src)
     return drain_windowed_counts(
-        spark,
-        src,
-        checkpoint=os.path.join(root, "ckpt"),
-        name="winstream_" + os.path.basename(root).replace("-", "_"),
+        spark, src, checkpoint=os.path.join(root, "ckpt")
     )
 
 
@@ -4415,7 +4414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # window to prove the fix in the driver record), the 3 latent
         # carriers of the same bug, the 3 lanes whose PLANS changed this
         # round (t7_crawl_streaming and dedup_minhash_incremental are new;
-        # j2_anti_seen_cuckoo now runs the executor-resident shard store;
+        # j2_anti_seen_sketch now runs the executor-resident shard store;
         # t6_windowed_streaming merges by last emission), and EVERY
         # remaining lane that has never held a driver-green row — 43 of
         # the 45 never-gated lanes, the r5
@@ -4434,7 +4433,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_export_manifest": q_corpus_export_manifest,
         "corpus_export_warc": q_corpus_export_warc,
         "t7_crawl_streaming": q_t7_crawl_streaming,
-        "j2_anti_seen_cuckoo": q_j2_anti_seen_cuckoo,
+        "j2_anti_seen_sketch": q_j2_anti_seen_sketch,
         "t6_windowed_streaming": q_t6_windowed_streaming,
         "dedup_minhash_incremental": q_dedup_minhash_incremental,
         "t5_interval_join_streaming": q_t5_interval_join_streaming,
@@ -4950,8 +4949,8 @@ FROM ranked r LEFT JOIN dom d ON r.vec_id = d.vec_id
             WHERE NOT EXISTS (SELECT 1 FROM seen s
                               WHERE s.dates = c.dates AND s.rule_id = c.rule_id)
         """,
-        "j2_anti_seen_cuckoo": f"""
-            -- the cuckoo sketch is a pre-filter over the exact anti-join, so
+        "j2_anti_seen_sketch": f"""
+            -- the seen sketch is a pre-filter over the exact anti-join, so
             -- the oracle is the plain anti-join keyed on the same portable
             -- Rabin-Karp hash both engines compute
             WITH combos AS (

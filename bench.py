@@ -40,7 +40,7 @@ HEADLINE = [
     "j8_metadata_join",
     "f2_url_build",
     "j2_anti_seen",
-    "j2_anti_seen_cuckoo",
+    "j2_anti_seen_sketch",
     "o1_o2_topk_drain",
     "o8_spaced_refresh",
     "t1_events_hourly",

@@ -30,19 +30,8 @@ class EngineConfig:
     probe_offset_days: int = 30
     # O8 spaced-refresh recrawl lane (reference downloader.py:39-68)
     recrawl_enabled: bool = True
-    # physical knobs (ours): frontier salt shards, bloom target fpp
+    # physical knob (ours): frontier salt shards
     n_salts: int = 16
-    bloom_fpp: float = 0.01
-    use_bloom: bool = True
-    # seen-set pre-filter backend (north_rule "bloom/cuckoo URL-seen"):
-    # "bloom"  — rebuilt from the frontier every epoch (O(frontier)/epoch,
-    #            OR-merged per partition; insert-only)
-    # "cuckoo" — built once, then maintained INCREMENTALLY: O(delta)/epoch
-    #            adds, in-place deletes at shutdown_compact (D4) — the
-    #            deletable sketch the reference's row-delete semantics map to
-    # use_bloom=False disables the pre-filter entirely (exact anti-join only)
-    seen_sketch: str = "bloom"
-    cuckoo_shards: int = 16
     # drop the F.broadcast hints on the hot-path dimension joins (budgets,
     # ok-url keys, crawl metadata) when their estimated row count exceeds
     # this — AQE then picks the join strategy, so a 10^8-host deployment
@@ -74,10 +63,6 @@ class EngineConfig:
             probe_offset_days=get("SessionDayChecker", "ProbeOffsetDays", 30),
             recrawl_enabled=get("Engine", "RecrawlEnabled", True),
             n_salts=get("Engine", "Salts", 16),
-            bloom_fpp=get("Engine", "BloomFpp", 0.01),
-            use_bloom=get("Engine", "UseBloom", True),
-            seen_sketch=get("Engine", "SeenSketch", "bloom"),
-            cuckoo_shards=get("Engine", "CuckooShards", 16),
             broadcast_threshold_rows=get(
                 "Engine", "BroadcastThresholdRows", 4_000_000
             ),

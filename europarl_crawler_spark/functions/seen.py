@@ -1,6 +1,6 @@
 """Sharded URL-seen set: exact anti-join + Bloom pre-filter.
 
-north_rule: "bloom/cuckoo URL-seen set keyed by canonicalized+hashed URLs".
+north_rule: a sharded URL-seen set keyed by canonicalized+hashed URLs.
 The reference's seen set is the UNIQUE(rule_id, url) constraint on the urls
 table (reference: europarl/db/url.py:45); here membership is EXACT via a
 left_anti join against the frontier table on ``url_hash`` — the Bloom filter
@@ -8,13 +8,10 @@ is strictly a *pre-filter* that lets most provably-new candidates skip the
 anti-join shuffle. False positives only cost a recheck; false negatives are
 impossible, so correctness never depends on the sketch (SURVEY §4.2).
 
-Two physical forms: ``build_bloom`` (per-partition numpy bitsets OR-reduced
-driver-side via treeReduce, probed through a broadcast pandas UDF — the
-small-sketch path), and ``BloomShardStore`` (r5 — per-shard bitset FILES
-written by the executors that built them, probed shard-locally after a
-pmod repartition; no process ever holds more than one shard, the form that
-survives a 10^10-URL frontier). The crawl engine's bloom mode uses the
-shard store; both are strictly pre-filters for the exact anti-join.
+The sketch is ``BloomShardStore``: per-shard bitset FILES written by the
+executors that built them, probed shard-locally after a pmod repartition;
+no process ever holds more than one shard, the form that survives a
+10^10-URL frontier.
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _MASK = (1 << 64) - 1
 # splitmix64 finalizer — cheap independent rehash of the already-uniform
@@ -69,63 +65,25 @@ class BloomFilter:
             out &= (self.bits[pos >> 3] >> (pos & 7).astype(np.uint8) & 1).astype(bool)
         return out
 
-    def union(self, other: "BloomFilter") -> "BloomFilter":
-        assert (self.n_bits, self.k) == (other.n_bits, other.k)
-        return BloomFilter(self.n_bits, self.k, self.bits | other.bits)
-
-
-def build_bloom(seen: DataFrame, hash_col: str = "url_hash", expected: int | None = None, fpp: float = 0.01) -> BloomFilter:
-    """Distributed build: per-partition bitsets, OR-combined on the driver."""
-    if expected is None:
-        expected = max(seen.count(), 1)
-    proto = BloomFilter.sized(expected, fpp)
-    n_bits, k = proto.n_bits, proto.k
-
-    def part(rows):
-        bf = BloomFilter(n_bits, k)
-        vals = np.fromiter((r[0] for r in rows), dtype=np.int64)
-        if len(vals):
-            bf.add_many(vals)
-        yield bf.bits
-
-    bits = seen.select(hash_col).rdd.mapPartitions(part).treeReduce(np.bitwise_or)
-    return BloomFilter(n_bits, k, bits)
-
 
 def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    sketch: "BloomFilter | object | None" = None,
+    sketch: "BloomShardStore | None" = None,
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """candidates not in seen — exact; the sketch only short-circuits the shuffle.
 
-    ``sketch`` is anything with a vectorized ``might_contain(np.int64[]) ->
-    bool[]`` — a :class:`BloomFilter` (insert-only, OR-mergeable) or a
-    :class:`~europarl_crawler_spark.functions.cuckoo.ShardedCuckoo`
-    (deletable, so recrawl evictions don't force a rebuild). Provably-new
-    rows (might_contain == false) bypass the anti-join entirely; only the
-    maybe-seen slice shuffles. At a 10^10-row seen set with mostly-fresh
-    candidates this cuts the anti-join input by ~(1 - fpp) and keeps the big
-    shuffle proportional to the *revisit* rate, not the candidate rate.
+    With a :class:`BloomShardStore`, provably-new rows (not in the sketch)
+    bypass the anti-join entirely; only the maybe-seen slice shuffles. At a
+    10^10-row seen set with mostly-fresh candidates this cuts the anti-join
+    input by ~(1 - fpp) and keeps the big shuffle proportional to the
+    *revisit* rate, not the candidate rate.
     """
     if sketch is None:
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
 
-    if hasattr(sketch, "tag_maybe"):
-        # executor-resident shard store (CuckooShardStore / BloomShardStore):
-        # candidates route to their shard's partition and each task loads
-        # ONLY its shards from files — no whole-filter broadcast, per-task
-        # memory O(frontier / n_shards). The scale path at 10^10 URLs.
-        tagged = sketch.tag_maybe(candidates, hash_col)
-    else:
-        obj = sketch  # captured whole (numpy-backed; the small-sketch path)
-
-        @pandas_udf("boolean")
-        def maybe_seen(h: pd.Series) -> pd.Series:
-            return pd.Series(obj.might_contain(h.to_numpy(dtype=np.int64)))
-
-        tagged = candidates.withColumn("_maybe", maybe_seen(F.col(hash_col)))
+    tagged = sketch.tag_maybe(candidates, hash_col)
     fresh = tagged.filter(~F.col("_maybe")).drop("_maybe")
     rechecked = (
         tagged.filter(F.col("_maybe"))
@@ -135,22 +93,42 @@ def anti_join_seen(
     return fresh.unionByName(rechecked)
 
 
+# Per-process probe cache: (shard file path, mtime_ns) -> bitset. mtime-keyed
+# so a rebuilt shard invalidates executor copies on the next probe; bounded
+# LRU so a task that happens to own several shards never grows past
+# _CACHE_MAX bitsets.
+_SHARD_CACHE: dict[tuple, np.ndarray] = {}
+_CACHE_MAX = 8
+
+
+def _load_shard_table(path) -> np.ndarray:
+    import os
+
+    key = (str(path), os.stat(path).st_mtime_ns)
+    t = _SHARD_CACHE.get(key)
+    if t is None:
+        t = np.load(path)
+        stale = [k for k in _SHARD_CACHE if k[0] == key[0]]
+        for k in stale:
+            del _SHARD_CACHE[k]
+        while len(_SHARD_CACHE) >= _CACHE_MAX:
+            del _SHARD_CACHE[next(iter(_SHARD_CACHE))]
+        _SHARD_CACHE[key] = t
+    return t
+
+
 class BloomShardStore:
     """Executor-resident sharded Bloom filter: one uint8 bitset file per
-    shard (``root/shard_NNNNN.npy`` + ``root/meta.json``) — the insert-only
-    twin of :class:`~europarl_crawler_spark.functions.cuckoo.
-    CuckooShardStore`, closing the same 10^10-URL residency hole for the
-    bloom backend (a whole-frontier Bloom at 1% fpp is ~12 GB; the r4 path
-    built it on the driver and broadcast it to every probe task).
+    shard (``root/shard_NNNNN.npy`` + ``root/meta.json``). A whole-frontier
+    Bloom at 1% fpp is ~12 GB at 10^10 URLs; no process ever holds it.
 
-    Same physical contract as the cuckoo store: probes repartition by
-    ``pmod(url_hash, n_shards)`` and each task loads ONLY its shards
-    (shared mtime-keyed LRU); builds write shard files from the executors
-    that built them (tmp + atomic rename, idempotent under task retry);
-    incremental adds OR bits into one touched shard at a time. No delete —
-    Bloom bits can't be removed (the deletable backend is the cuckoo
-    store). Strictly a pre-filter: any lost/corrupt shard only costs extra
-    maybe-seen rechecks in the exact anti-join.
+    Probes repartition by ``pmod(url_hash, n_shards)`` and each task loads
+    ONLY its shards (mtime-keyed per-process LRU); builds write shard files
+    from the executors that built them (tmp + atomic rename, idempotent
+    under task retry). The ``root`` must be storage every task can reach — a
+    local dir under local[*], shared/object storage on a cluster. Strictly a
+    pre-filter: any lost/corrupt shard only costs extra maybe-seen rechecks
+    in the exact anti-join.
     """
 
     def __init__(self, root):
@@ -163,28 +141,9 @@ class BloomShardStore:
         self.n_shards = int(meta["n_shards"])
         self.n_bits = int(meta["n_bits"])
         self.k = int(meta["k"])
-        self.stamp = meta.get("stamp")
 
     def _shard_path(self, sid: int):
         return self.root / f"shard_{sid:05d}.npy"
-
-    def set_stamp(self, stamp) -> None:
-        import json
-        import os
-
-        self.stamp = stamp
-        tmp = self.root / "meta.json.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "n_shards": self.n_shards,
-                    "n_bits": self.n_bits,
-                    "k": self.k,
-                    "stamp": stamp,
-                },
-                fh,
-            )
-        os.replace(tmp, self.root / "meta.json")
 
     @classmethod
     def build(
@@ -239,12 +198,7 @@ class BloomShardStore:
         rows.mapInPandas(part, schema="shard int, n_keys long").collect()
         with open(rootp / "meta.json", "w") as fh:
             json.dump(
-                {
-                    "n_shards": int(n_shards),
-                    "n_bits": int(n_bits),
-                    "k": int(k),
-                    "stamp": None,
-                },
+                {"n_shards": int(n_shards), "n_bits": int(n_bits), "k": int(k)},
                 fh,
             )
         return cls(rootp)
@@ -252,11 +206,14 @@ class BloomShardStore:
     # -- probe ---------------------------------------------------------------
 
     def tag_maybe(self, candidates: DataFrame, hash_col: str) -> DataFrame:
-        """candidates + boolean ``_maybe``, shard-local probe (see
-        CuckooShardStore.tag_maybe — same routing, Bloom membership)."""
-        from pyspark.sql import types as T
+        """candidates + boolean ``_maybe`` column, shard-local probe.
 
-        from .cuckoo import _load_shard_table
+        The one shuffle is the candidate repartition by shard — the price
+        of never holding more than one shard per task; at 10^10 URLs that
+        shuffle is O(candidates), where a broadcast filter would be
+        O(filter) PER EXECUTOR. Row order within partitions is irrelevant
+        downstream (the caller filters on _maybe and unions)."""
+        from pyspark.sql import types as T
 
         n_shards, n_bits, k = self.n_shards, self.n_bits, self.k
         root_s = str(self.root)
@@ -289,31 +246,9 @@ class BloomShardStore:
             ).mapInPandas(probe, schema=out_schema)
         )
 
-    # -- driver-side (delta-bounded / tests) ---------------------------------
-
-    def add_many(self, hashes) -> None:
-        """Incremental insert: OR bits into one touched shard at a time."""
-        import os
-
-        from .cuckoo import _load_shard_table
-
-        h = np.asarray(hashes, dtype=np.int64)
-        s = np.mod(h, self.n_shards)
-        for sid in np.unique(s):
-            p = self._shard_path(int(sid))
-            bf = BloomFilter(
-                self.n_bits,
-                self.k,
-                _load_shard_table(p).copy() if p.exists() else None,
-            )
-            bf.add_many(h[s == sid])
-            tmp = str(p) + f".tmp-{os.getpid()}"
-            np.save(tmp, bf.bits)
-            os.replace(tmp + ".npy", p)
-
     def might_contain(self, hashes) -> np.ndarray:
-        from .cuckoo import _load_shard_table
-
+        """Driver-side probe (tests / small arrays) — shard-at-a-time; the
+        data-plane path is :meth:`tag_maybe`."""
         h = np.asarray(hashes, dtype=np.int64)
         out = np.zeros(len(h), dtype=bool)
         s = np.mod(h, self.n_shards)

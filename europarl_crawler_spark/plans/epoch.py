@@ -24,9 +24,6 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import numpy as np
-
-from ..functions.cuckoo import CuckooShardStore
 from ..functions.rules import rules_df
 from ..functions.seen import BloomShardStore, anti_join_seen
 from ..sources import schema as S
@@ -68,7 +65,6 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         prefetch_limit: int | None = None,
         epoch_secs: float | None = None,
-        use_bloom: bool | None = None,
         config=None,
         crawl_delays: DataFrame | None = None,
     ):
@@ -85,11 +81,7 @@ class CrawlEngine:
         self.config = cfg
         self.prefetch_limit = prefetch_limit if prefetch_limit is not None else cfg.prefetch_limit
         self.epoch_secs = epoch_secs if epoch_secs is not None else cfg.epoch_secs
-        self.use_bloom = use_bloom if use_bloom is not None else cfg.use_bloom
         self.rules = rules_df(spark)
-        # incremental cuckoo seen-sketch (config seen_sketch="cuckoo"):
-        # lives across epochs, rebuilt lazily after overflow/restart
-        self._cuckoo = None
 
     # -- state ----------------------------------------------------------------
 
@@ -129,53 +121,6 @@ class CrawlEngine:
             F.max("last_ok_at").alias("last_ok_at"),
             F.max("last_ok_epoch").alias("last_ok_epoch"),
         )
-
-    def _build_cuckoo(self, frontier: DataFrame):
-        """Load-or-(re)build the incremental seen sketch (seen_sketch=
-        "cuckoo"). A checkpoint stamped by ``save_sketch`` (with the
-        frontier commit it reflects) is loaded instead of rebuilding when
-        its stamp matches the CURRENT frontier head — at a 10^10-URL
-        frontier the rebuild is a full-table scan, the load is a meta.json
-        read. Any stamp mismatch (epochs committed since) falls back to
-        the build; the sketch sizes at load 0.21 (~4.7× headroom) so
-        per-epoch increments fit for many epochs between rebuilds.
-
-        The sketch is a :class:`~europarl_crawler_spark.functions.cuckoo.
-        CuckooShardStore`: shard tables live as files under the store
-        root (executor-resident probes, driver peak = ONE shard —
-        O(frontier/n_shards) per task, never the whole filter in any
-        process; the r4 design broadcast the concatenated filter, ~25 GB
-        at 10^10 URLs)."""
-        loaded = self._load_sketch()
-        if loaded is not None:
-            return loaded
-        return CuckooShardStore.build(
-            frontier,
-            self._sketch_dir() / "store",
-            "url_id",
-            n_shards=self.config.cuckoo_shards,
-            load=0.21,
-        )
-
-    def _sketch_dir(self):
-        return self.store.root / "_seen_sketch"
-
-    def _load_sketch(self):
-        e = self.store.latest("frontier")
-        d = self._sketch_dir() / "store"
-        if e is None or not (d / "meta.json").exists():
-            return None
-        st = CuckooShardStore(d)
-        return st if st.stamp == e else None
-
-    def save_sketch(self) -> None:
-        """Stamp the shard store with the frontier commit it reflects —
-        the shard files ARE the checkpoint (maintenance rewrites them
-        atomically per shard); only a matching stamp is ever loadable."""
-        e = self.store.latest("frontier")
-        if self._cuckoo is None or e is None:
-            return
-        self._cuckoo.set_stamp(e)
 
     def bootstrap(self, days: DataFrame) -> None:
         """Initial load: seed-day domain (reference table bootstrap +
@@ -248,59 +193,24 @@ class CrawlEngine:
         #    pre-filtered (north_rule). Seen key = url_id (= rule_id × url,
         #    the reference's UNIQUE constraint, db/url.py:45).
         sketch = None
-        mode = self.config.seen_sketch if self.use_bloom else "none"
-        if mode == "cuckoo":
-            if self._cuckoo is None:
-                # restart path: the shutdown checkpoint's stamp can only
-                # match BEFORE this epoch's merge advances the chain head
-                self._cuckoo = self._load_sketch()
-            sketch = self._cuckoo
-        elif mode == "bloom" and self.store.latest("frontier") is not None:
+        if self.store.latest("frontier") is not None:
             expected = sum(m["rows"] for m in self.store.manifests("frontier")) or 1
-            # executor-resident shard store (r5): the per-epoch rebuild is
-            # unchanged, but the bitsets live as files and probes load only
-            # their shard — no whole-filter broadcast (see BloomShardStore)
+            # executor-resident shard store, rebuilt from the frontier every
+            # epoch: the bitsets live as files and probes load only their
+            # shard — no whole-filter broadcast (see BloomShardStore)
             sketch = BloomShardStore.build(
                 frontier,
-                self._sketch_dir() / "bloom",
+                self.store.root / "_seen_bloom",
                 "url_id",
                 expected=expected,
-                n_shards=self.config.cuckoo_shards,
             )
         fresh = anti_join_seen(new_urls, frontier, sketch, hash_col="url_id")
-        if self._cuckoo is not None:
-            fresh = fresh.persist()
         # the frontier keeps its OWN commit chain (like documents/url_state):
         # shutdown_compact's delete+compact commits advance it past the
         # crawl clock, and a resumed crawl must commit above BOTH
         f_e = max(e, (self.store.latest("frontier") or 0) + 1)
         m = self.store.merge("frontier", fresh, f_e, keys=["url_id"])
-        if self._cuckoo is not None:
-            # incremental sketch maintenance: only THIS epoch's genuinely-new
-            # url_ids (post exact anti-join) cross to the driver — O(delta),
-            # bounded by the prefetch limits, vs the bloom path's O(frontier)
-            # rebuild per epoch. Overflow (headroom exhausted) drops the
-            # sketch; it is rebuilt below from the merged frontier.
-            ids = np.unique(
-                np.fromiter(
-                    (r.url_id for r in fresh.select("url_id").collect()),
-                    dtype=np.int64,
-                )
-            )
-            try:
-                self._cuckoo.add_many(ids)
-            except RuntimeError:
-                self._cuckoo = None
-            fresh.unpersist()
         frontier = self._read("frontier", S.FRONTIER)
-        if (
-            mode == "cuckoo"
-            and self._cuckoo is None
-            and self.store.latest("frontier") is not None
-        ):
-            # covers first build (epoch 1), rebuild-after-overflow, AND
-            # restart into a steady-state epoch that merged zero new urls
-            self._cuckoo = self._build_cuckoo(frontier)
 
         # 3. pending = frontier rows without a terminal outcome — covers both
         #    never-fetched and dead-letter retries (T6: 408/460/429/5xx stay
@@ -471,24 +381,5 @@ class CrawlEngine:
         frontier = self._read("frontier", S.FRONTIER)
         fetched_ids = self._url_state().select("url_id")
         uncrawled = frontier.join(fetched_ids, "url_id", "left_anti")
-        if self._cuckoo is not None:
-            # the deletable-sketch payoff (reference deletes seen rows,
-            # db/url.py:139-156): evict the dropped urls from the cuckoo
-            # in place instead of rebuilding. Collected BEFORE the delete/
-            # compact rewrite the underlying files. A huge drop set would
-            # make rebuild cheaper than delete — past the broadcast
-            # threshold just discard the sketch; the next epoch rebuilds.
-            ids = np.fromiter(
-                (r.url_id for r in uncrawled.select("url_id").collect()),
-                dtype=np.int64,
-            )
-            if len(ids) <= self.config.broadcast_threshold_rows:
-                self._cuckoo.delete_many(np.unique(ids))
-            else:
-                self._cuckoo = None
         self.store.delete("frontier", uncrawled, e, keys=["url_id"])
         self.store.compact("frontier", self.spark, e + 1)
-        # post-eviction sketch == compacted frontier: checkpoint it stamped
-        # with the compaction commit so the next run loads instead of
-        # rescanning the frontier
-        self.save_sketch()

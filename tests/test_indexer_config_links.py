@@ -49,14 +49,14 @@ def test_config_from_ini(tmp_path):
     ini = tmp_path / "settings.ini"
     ini.write_text(
         "[TokenBucketWorker]\nMinIntervalSecs = 5\nThrottlingFactor = 4\n"
-        "[General]\nPrefetchLimit = 10\n[Engine]\nEpochSecs = 120\nUseBloom = false\n"
+        "[General]\nPrefetchLimit = 10\n[Engine]\nEpochSecs = 120\nRecrawlEnabled = false\n"
     )
     cfg = EngineConfig.from_ini(str(ini))
     assert cfg.min_interval_secs == 5.0
     assert cfg.throttling_factor == 4.0
     assert cfg.prefetch_limit == 10
     assert cfg.epoch_secs == 120.0
-    assert cfg.use_bloom is False
+    assert cfg.recrawl_enabled is False
     assert cfg.bucket_capacity == 100  # default preserved
 
 

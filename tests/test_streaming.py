@@ -138,13 +138,59 @@ def test_drain_windowed_counts_negative_values(spark, tmp_path):
             n += 1
     assert n == 4
     got = S.drain_windowed_counts(
-        spark,
-        str(flat),
-        checkpoint=str(tmp_path / "ckpt"),
-        name="negwin",
+        spark, str(flat), checkpoint=str(tmp_path / "ckpt")
     ).collect()
     assert len(got) == 1
     row = got[0]
     # batch truth: 4 events, cents = 1000 - 300 - 400 - 250 = 50
     assert row["n"] == 4
     assert row["cents"] == 50
+
+
+def _event_source(spark, path, events):
+    """One parquet file of (minute, event_type, value) events in hour 0 of
+    2024-01-01."""
+    import pandas as pd
+
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    pdf = pd.DataFrame(
+        {
+            "event_id": list(range(len(events))),
+            "ts": [pd.Timestamp(2024, 1, 1, 0, m) for m, _, _ in events],
+            "user_id": [1] * len(events),
+            "event_type": [t for _, t, _ in events],
+            "value": [v for _, _, v in events],
+            "props": [None] * len(events),
+        }
+    )
+    spark.createDataFrame(pdf, schema).coalesce(1).write.parquet(str(path))
+    return str(path)
+
+
+def test_drain_windowed_counts_fresh_checkpoint_drops_stale_emissions(
+    spark, tmp_path
+):
+    """A drain into a fresh checkpoint must not merge the emissions an
+    earlier drain left beside it: drain source A, delete only the
+    checkpoint, drain source B into the same path — exactly B's counts."""
+    import shutil
+
+    src_a = _event_source(
+        spark, tmp_path / "a", [(1, "view", 1.0), (2, "click", 2.0)]
+    )
+    src_b = _event_source(spark, tmp_path / "b", [(3, "view", 0.5)])
+    ckpt = str(tmp_path / "ckpt")
+
+    first = S.drain_windowed_counts(spark, src_a, checkpoint=ckpt).collect()
+    assert sorted((r["event_type"], r["n"], r["cents"]) for r in first) == [
+        ("click", 1, 200),
+        ("view", 1, 100),
+    ]
+    shutil.rmtree(ckpt)
+    got = S.drain_windowed_counts(spark, src_b, checkpoint=ckpt).collect()
+    assert [(r["event_type"], r["n"], r["cents"]) for r in got] == [
+        ("view", 1, 50)
+    ]
